@@ -1,0 +1,33 @@
+package perfbench
+
+/** Minimal JSON rendering for the engine's observation file. */
+object Json {
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Number => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case p: Product =>
+      (0 until p.productArity).map(i => quote(p.productElementName(i)) + ":" +
+        render(p.productElement(i))).mkString("{", ",", "}")
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def write(path: String, v: Any): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), render(v)): Unit
+}
